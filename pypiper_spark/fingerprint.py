@@ -1,13 +1,14 @@
-"""Stat-based corpus fingerprints for cache/memo/demo-table keys.
+"""Stat-based corpus keys for every artifact derived from the corpus.
 
-Any artifact derived from a source parquet table (BPE merge memos,
-IVF/PQ index artifacts, tableformat demo tables) must key on WHAT the
-source currently is, not just where it lives: a path-only key serves
-stale artifacts after the source regenerates in place (ADVICE r6 for
-the BPE memo, ADVICE r7 for the tableformat demo roots). The
-fingerprint hashes name+size+mtime_ns of every part file, walking
-into directory-style parquet outputs — replacing part files without
-touching the directory entry still changes it.
+``corpus_key`` is the one corpus fingerprint: anything built from a
+source parquet table must key on WHAT the source currently is, not
+just where it lives, or it serves stale state after the source
+regenerates in place. The key hashes name+size+mtime_ns of every part
+file, walking into directory-style parquet, so replacing a part file
+without touching the directory entry still changes it.
+``pypiper_spark.artifacts`` is the single store built on it (naming,
+atomic publish, in-process memo); the tableformat demo roots in
+``queries/snapshots.py`` use it directly.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ import hashlib
 import os
 
 
-def table_fingerprint(sf_dir: str, table: str = "documents") -> str:
+def _table_fingerprint(sf_dir: str, table: str) -> str:
     """Raw stat fingerprint of one table's parquet file/directory."""
     path = os.path.join(sf_dir, f"{table}.parquet")
     if os.path.isdir(path):
@@ -39,7 +40,7 @@ def table_num_rows(sf_dir: str, table: str) -> int:
     scan) — the input to every size-adaptive geometry decision
     (simhash band width, IVFPQ nprobe, PQ shortlist). Handles
     directory-style parquet (sum over part-file footers), which
-    spark.read.parquet and table_fingerprint both support: ADVICE r10
+    spark.read.parquet and corpus_key both support: ADVICE r10
     found the single-file-only version swallowed IsADirectoryError
     into n=0 and silently selected the small-corpus geometry at any
     scale — reintroducing the corpus-quadratic band self-join the
@@ -71,6 +72,6 @@ def corpus_key(sf_dir: str, label: str, tables: tuple = ("documents",)) -> str:
     key, so long-lived processes and on-disk demo/index roots can't
     serve stale state."""
     blob = "\x1f".join(
-        [sf_dir, label, *(table_fingerprint(sf_dir, t) for t in tables)]
+        [sf_dir, label, *(_table_fingerprint(sf_dir, t) for t in tables)]
     )
     return hashlib.md5(blob.encode()).hexdigest()[:12]

@@ -68,23 +68,19 @@ def _truth_pairs(spark: SparkSession, sf_dir: str, threshold: float) -> DataFram
     (fingerprint.corpus_key discipline).
 
     DRIVER-BOUNDED build (VERDICT r11 #1): the pair frame is written
-    by EXECUTORS via ``_atomic_write_df`` (the build_hnsw_graph v4
-    publish pattern) — nothing corpus- or pair-count-scaled crosses
-    the driver. The r11 form collected every truth pair into Python
-    lists before a pyarrow write; bounded at this corpus (~1M pairs)
-    but data-scaled on a near-dup-heavy crawl. Pinned by
-    tests/test_approx_ops.py::test_artifact_builders_are_driver_bounded."""
+    by EXECUTORS via ``artifacts.publish_df`` — nothing corpus- or
+    pair-count-scaled crosses the driver. The r11 form collected every
+    truth pair into Python lists before a pyarrow write; bounded at this
+    corpus (~1M pairs) but data-scaled on a near-dup-heavy crawl. Pinned
+    by tests/test_approx_ops.py::test_artifact_builders_are_driver_bounded."""
     import os
 
-    from pypiper_spark.fingerprint import corpus_key
-    from pypiper_spark.queries.vectors import _atomic_write_df, _index_dir
+    from pypiper_spark.artifacts import path_for, publish_df
 
-    key = corpus_key(sf_dir, f"jaccard_truth_{threshold}")
-    path = os.path.join(_index_dir(), f"jt_{key}.parquet")
+    path = path_for("jt", sf_dir, ("documents",), f"threshold={threshold}")
     if not os.path.exists(path):
-        _atomic_write_df(
-            _jaccard_pairs(spark, sf_dir, threshold).select("id_a", "id_b"),
-            path,
+        publish_df(
+            _jaccard_pairs(spark, sf_dir, threshold).select("id_a", "id_b"), path
         )
     return spark.read.parquet(path)
 

@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pypiper_spark.artifacts import memo, path_for
 from pypiper_spark.catalog import load_table
 from pypiper_spark.registry import register
 
@@ -170,32 +171,24 @@ def quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BPE_MERGES = 8
 
-# Learned-merge memo, keyed by (sf_dir, corpus fingerprint, n_merges):
+# Learned merges (and the byte-level merges and unigram pieces below)
+# are memoized in process by artifacts.memo, keyed by corpus + params:
 # training is deterministic, so re-deriving it per downstream query
-# (train + encode both need the table) would only re-pay the 8 Spark
-# rounds. In-memory only — the 8-row merge table is not worth a disk
-# artifact (contrast the IVF/PQ artifacts in vectors.py, which replace
-# an expensive ML fit).
-_BPE_MEMO: dict[tuple, list] = {}
-
-
-def _bpe_fingerprint(sf_dir: str) -> str:
-    """Stat-based corpus fingerprint for the in-process merge memo —
-    a long-lived session can't serve stale merges after data
-    regeneration (ADVICE r6). Shared logic lives in
-    pypiper_spark.fingerprint (ADVICE r7 generalized it to every
-    corpus-keyed artifact root)."""
-    from pypiper_spark.fingerprint import table_fingerprint
-
-    return table_fingerprint(sf_dir, "documents")
+# (train + encode both need the table) would only re-pay the Spark
+# rounds, and a long-lived session can't serve stale merges after data
+# regeneration (ADVICE r6). In-memory only — the 8-row merge table is
+# not worth a disk artifact (contrast the IVF/PQ artifacts in
+# vectors.py, which replace an expensive ML fit).
 
 
 def _learn_bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
     """Run the Sennrich BPE merge loop (docstring on q_bpe_train) and
     return [(rank, left, right, merged, pair_count), ...]."""
-    key = (sf_dir, _bpe_fingerprint(sf_dir), _BPE_MERGES)
-    if key in _BPE_MEMO:
-        return _BPE_MEMO[key]
+    path = path_for("bpe", sf_dir, ("documents",), f"merges={_BPE_MERGES}")
+    return memo(path, lambda: _fit_bpe_merges(spark, sf_dir))
+
+
+def _fit_bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
     from pyspark.sql.functions import pandas_udf
 
     words = (
@@ -253,7 +246,6 @@ def _learn_bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
         seqs.unpersist()
         seqs = new
     seqs.unpersist()
-    _BPE_MEMO[key] = merges
     return merges
 
 
@@ -543,7 +535,6 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BPE_BYTES_MERGES = 8
 _BPE_SPECIALS = ("<|endoftext|>",)  # the doc terminator a packer inserts
-_BPE_BYTES_MEMO: dict[tuple, list] = {}
 
 
 def _word_counts(spark: SparkSession, sf_dir: str):
@@ -566,9 +557,11 @@ def _learn_bpe_merges_bytes(spark: SparkSession, sf_dir: str) -> list[tuple]:
     merge — so multi-byte UTF-8 and arbitrary binary-ish words need
     no fallback path. Ties break (max weighted count, then smallest
     left id, then smallest right id)."""
-    key = (sf_dir, _bpe_fingerprint(sf_dir), _BPE_BYTES_MERGES)
-    if key in _BPE_BYTES_MEMO:
-        return _BPE_BYTES_MEMO[key]
+    path = path_for("bpe_bytes", sf_dir, ("documents",), f"merges={_BPE_BYTES_MERGES}")
+    return memo(path, lambda: _fit_bpe_merges_bytes(spark, sf_dir))
+
+
+def _fit_bpe_merges_bytes(spark: SparkSession, sf_dir: str) -> list[tuple]:
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<int>")
@@ -627,7 +620,6 @@ def _learn_bpe_merges_bytes(spark: SparkSession, sf_dir: str) -> list[tuple]:
         seqs = new
         next_id += 1
     seqs.unpersist()
-    _BPE_BYTES_MEMO[key] = merges
     return merges
 
 
@@ -993,7 +985,6 @@ _UNI_SEED_MAX_LEN = 4
 _UNI_VOCAB_K = 2000
 _UNI_EM_ITERS = 3
 _UNI_OUT_K = 50
-_UNI_MEMO: dict[tuple, list] = {}
 
 
 def _unigram_seed(spark: SparkSession, sf_dir: str):
@@ -1060,9 +1051,12 @@ def _learn_unigram(spark: SparkSession, sf_dir: str) -> list[tuple]:
     driver-side renormalization (k bounded collects of a bounded
     model — the sanctioned shape). Returns the final top pieces as
     (rank, piece, weighted_count, score8)."""
-    key = (sf_dir, _bpe_fingerprint(sf_dir), _UNI_VOCAB_K, _UNI_EM_ITERS)
-    if key in _UNI_MEMO:
-        return _UNI_MEMO[key]
+    params = f"k={_UNI_VOCAB_K}:iters={_UNI_EM_ITERS}"
+    path = path_for("unigram", sf_dir, ("documents",), params)
+    return memo(path, lambda: _fit_unigram(spark, sf_dir))
+
+
+def _fit_unigram(spark: SparkSession, sf_dir: str) -> list[tuple]:
     import math
 
     from pyspark.sql.functions import pandas_udf
@@ -1099,7 +1093,6 @@ def _learn_unigram(spark: SparkSession, sf_dir: str) -> list[tuple]:
         (rank, p, n, int(round(logp[p] * 1e8)))
         for rank, (p, n) in enumerate(ranked, start=1)
     ]
-    _UNI_MEMO[key] = out
     return out
 
 

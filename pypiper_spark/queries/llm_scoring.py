@@ -548,10 +548,6 @@ def scd2_pointintime(spark: SparkSession, sf_dir: str) -> DataFrame:
 # this shape of model: bag-of-words, class-conditional counts).
 # ---------------------------------------------------------------------------
 
-# In-process memo over the persisted NB model artifact.
-_NB_MEMO: dict = {}
-
-
 def _nb_artifacts(spark: SparkSession, sf_dir: str):
     """Train-once Naive Bayes model as a persisted artifact (VERDICT
     r7 #3, the DSIR/IVF artifact discipline): the wide model table
@@ -567,18 +563,14 @@ def _nb_artifacts(spark: SparkSession, sf_dir: str):
     import json as _json
     import tempfile as _tempfile
 
-    from pypiper_spark.fingerprint import corpus_key
+    from pypiper_spark.artifacts import memo, path_for, publish
 
-    key = corpus_key(sf_dir, "nb_model_v1")
-    if key in _NB_MEMO:
-        mpath, info = _NB_MEMO[key]
-        return spark.read.parquet(mpath), info
-    base = os.path.join(_tempfile.gettempdir(), f"pypiper_nb_{key}")
-    mpath = os.path.join(base, "model")
-    ipath = os.path.join(base, "info.json")
-    if not (
-        os.path.exists(os.path.join(mpath, "_SUCCESS")) and os.path.exists(ipath)
-    ):
+    base = path_for(
+        "pypiper_nb", sf_dir, ("documents",), "v1",
+        root=_tempfile.gettempdir(), suffix="",
+    )
+
+    def write(out: str) -> None:
         d = load_table(spark, sf_dir, "documents")
         train = d.filter(F.col("doc_id") % 5 != 0)
         tok = train.select(
@@ -627,17 +619,19 @@ def _nb_artifacts(spark: SparkSession, sf_dir: str):
             .pivot("c", cls)
             .agg(F.first("lp8"))
         )
-        os.makedirs(base, exist_ok=True)
-        model_wide.write.mode("overwrite").parquet(mpath)
+        model_wide.write.parquet(os.path.join(out, "model"))
         cw.unpersist()
-        fd, tmp = _tempfile.mkstemp(dir=base, prefix=".info_")
-        with os.fdopen(fd, "w") as fh:
+        with open(os.path.join(out, "info.json"), "w") as fh:
             _json.dump(info, fh)
-        os.replace(tmp, ipath)
-    with open(ipath) as fh:
-        info = {c: (int(u), int(p)) for c, (u, p) in _json.load(fh).items()}
-    _NB_MEMO[key] = (mpath, info)
-    return spark.read.parquet(mpath), info
+
+    def load() -> dict:
+        if not os.path.exists(base):
+            publish(base, write)
+        with open(os.path.join(base, "info.json")) as fh:
+            return {c: (int(u), int(p)) for c, (u, p) in _json.load(fh).items()}
+
+    info = memo(base, load)
+    return spark.read.parquet(os.path.join(base, "model")), info
 
 
 _NB_ORACLE = """
@@ -781,14 +775,10 @@ def classifier_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DSIR_BUCKETS = 4096
 _DSIR_K = 200
 
-# In-process memo over the persisted artifact (see _dsir_ratio_vec).
-_DSIR_MEMO: dict = {}
-
-
 def _dsir_ratio_vec(spark: SparkSession, sf_dir: str):
     """The 4096-bucket DSIR log-ratio model as a dense int64 vector,
-    fit ONCE per corpus and persisted (corpus-fingerprint-keyed JSON
-    under tempdir, atomic tmp+rename write) — the IVF-centroid
+    fit ONCE per corpus and persisted (corpus-keyed JSON under tempdir,
+    published through pypiper_spark.artifacts) — the IVF-centroid
     artifact discipline applied to importance weights: DSIR's raw and
     target hashed-unigram LMs are an OFFLINE fit in Xie et al.'s own
     setup (fit on corpus snapshots, then score many candidate
@@ -802,57 +792,57 @@ def _dsir_ratio_vec(spark: SparkSession, sf_dir: str):
 
     import numpy as np
 
-    from pypiper_spark.fingerprint import corpus_key
+    from pypiper_spark.artifacts import memo, path_for, publish
 
-    key = corpus_key(sf_dir, "dsir_ratio_v1")
-    if key in _DSIR_MEMO:
-        return _DSIR_MEMO[key]
-    path = os.path.join(_tempfile.gettempdir(), f"pypiper_dsir_{key}.json")
-    if os.path.exists(path):
+    path = path_for(
+        "pypiper_dsir", sf_dir, ("documents",), "v1",
+        root=_tempfile.gettempdir(), suffix=".json",
+    )
+
+    def write(out: str) -> None:
+        d = load_table(spark, sf_dir, "documents")
+        bucket = (
+            F.conv(F.substring(F.md5(F.col("w").cast("binary")), 1, 8), 16, 10)
+            .cast("bigint") % _DSIR_BUCKETS
+        )
+        tok = (
+            d.select("lang", F.explode(F.split("text", " ")).alias("w"))
+            .select("lang", bucket.alias("b"))
+        )
+        counts = tok.groupBy("b").agg(
+            F.count(F.lit(1)).alias("r_cnt"),
+            F.count(F.when(F.col("lang") == "en", 1)).alias("t_cnt"),
+        )
+        tots = counts.agg(
+            F.sum("r_cnt").alias("r_tot"), F.sum("t_cnt").alias("t_tot")
+        )
+
+        def _lp8(expr):
+            return F.round(F.round(F.log(expr), 8) * 1e8).cast("long")
+
+        ratio = counts.crossJoin(F.broadcast(tots)).select(
+            "b",
+            (
+                _lp8(
+                    (F.col("t_cnt") + 1.0) / (F.col("t_tot") + F.lit(_DSIR_BUCKETS))
+                )
+                - _lp8((F.col("r_cnt") + 1.0) / (F.col("r_tot") + F.lit(_DSIR_BUCKETS)))
+            ).alias("w8"),
+        )
+        vec = [0] * _DSIR_BUCKETS
+        for r in ratio.collect():
+            vec[int(r.b)] = int(r.w8)
+        with open(out, "w") as fh:
+            _json.dump(vec, fh)
+
+    def load():
+        if not os.path.exists(path):
+            publish(path, write)
         with open(path) as fh:
-            arr = np.array(_json.load(fh), dtype=np.int64)
-        if arr.size == _DSIR_BUCKETS:
-            _DSIR_MEMO[key] = arr
-            return arr
+            return np.array(_json.load(fh), dtype=np.int64)
 
-    d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("w").cast("binary")), 1, 8), 16, 10)
-        .cast("bigint") % _DSIR_BUCKETS
-    )
-    tok = (
-        d.select("lang", F.explode(F.split("text", " ")).alias("w"))
-        .select("lang", bucket.alias("b"))
-    )
-    counts = tok.groupBy("b").agg(
-        F.count(F.lit(1)).alias("r_cnt"),
-        F.count(F.when(F.col("lang") == "en", 1)).alias("t_cnt"),
-    )
-    tots = counts.agg(
-        F.sum("r_cnt").alias("r_tot"), F.sum("t_cnt").alias("t_tot")
-    )
+    return memo(path, load)
 
-    def _lp8(expr):
-        return F.round(F.round(F.log(expr), 8) * 1e8).cast("long")
-
-    ratio = counts.crossJoin(F.broadcast(tots)).select(
-        "b",
-        (
-            _lp8(
-                (F.col("t_cnt") + 1.0) / (F.col("t_tot") + F.lit(_DSIR_BUCKETS))
-            )
-            - _lp8((F.col("r_cnt") + 1.0) / (F.col("r_tot") + F.lit(_DSIR_BUCKETS)))
-        ).alias("w8"),
-    )
-    vec = np.zeros(_DSIR_BUCKETS, dtype=np.int64)
-    for r in ratio.collect():
-        vec[int(r.b)] = int(r.w8)
-    fd, tmp = _tempfile.mkstemp(dir=_tempfile.gettempdir(), prefix=".dsir_")
-    with os.fdopen(fd, "w") as fh:
-        _json.dump([int(x) for x in vec], fh)
-    os.replace(tmp, path)
-    _DSIR_MEMO[key] = vec
-    return vec
 
 _DSIR_ORACLE = f"""
   WITH tok AS (

@@ -50,27 +50,28 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     files — at 100 TB you pin the schema explicitly instead; this
     query demonstrates the semantics, the footer-scan cost is the
     reason the docstring tells you not to rely on it at scale."""
-    from pypiper_spark.fingerprint import corpus_key
+    from pypiper_spark.artifacts import path_for, publish
 
     o = load_table(spark, sf_dir, "orders")
-    # corpus-fingerprinted key (ADVICE r7): build-once path, so
-    # regenerated source data must invalidate it
-    key = corpus_key(sf_dir, "orders_evo", tables=("orders",))
-    path = f"{tempfile.gettempdir()}/pypiper_evo_{key}"
+    path = path_for(
+        "pypiper_evo", sf_dir, ("orders",), root=tempfile.gettempdir(), suffix=""
+    )
     cutoff = F.lit("1996-01-01 00:00:00").cast("timestamp_ntz")
-    if not os.path.exists(os.path.join(path, "v2", "_SUCCESS")):
+
+    def write(out: str) -> None:
         (
             o.filter(F.col("o_orderdate") < cutoff)
             .select("o_orderkey", "o_totalprice")
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "v1"))
+            .write.parquet(os.path.join(out, "v1"))
         )
         (
             o.filter(F.col("o_orderdate") >= cutoff)
             .select("o_orderkey", "o_totalprice", "o_orderpriority")
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "v2"))
+            .write.parquet(os.path.join(out, "v2"))
         )
+
+    if not os.path.exists(path):
+        publish(path, write)
     back = spark.read.option("mergeSchema", True).parquet(
         os.path.join(path, "v1"), os.path.join(path, "v2")
     )

@@ -193,23 +193,22 @@ def scan_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-style partitioned write + partition-pruned read — THE scan
     pattern at 100 TB: data laid out by a predicate column so a filter
     on it skips whole directories, not rows. orders is staged
-    partitioned by o_orderpriority (once per sf dir, marker-gated);
+    partitioned by o_orderpriority (once per corpus, an artifact);
     the read filters to 2 of 5 partitions, and tests assert the plan's
     PartitionFilters prove pruning (the other 3 directories are never
     opened). Aggregation in exact integer cents."""
-    import hashlib
     import os
     import tempfile
 
-    from pypiper_spark.fingerprint import corpus_key
+    from pypiper_spark.artifacts import path_for, publish
 
     o = load_table(spark, sf_dir, "orders")
-    # corpus-fingerprinted key (ADVICE r7): this path is build-once,
-    # so regenerated source data must invalidate it
-    key = corpus_key(sf_dir, "orders_part", tables=("orders",))
-    path = f"{tempfile.gettempdir()}/pypiper_part_{key}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        o.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
+    path = path_for(
+        "pypiper_part", sf_dir, ("orders",), "o_orderpriority",
+        root=tempfile.gettempdir(), suffix="",
+    )
+    if not os.path.exists(path):
+        publish(path, lambda out: o.write.partitionBy("o_orderpriority").parquet(out))
     back = spark.read.parquet(path).filter(
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     )
@@ -361,20 +360,24 @@ def scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probe collects in vectors.py — then scans them distributed.
     The oracle recomputes byte counts from the nation table, so the
     scan must see every file, whole."""
-    import hashlib
     import os
     import tempfile
 
+    from pypiper_spark.artifacts import path_for, publish
+
     n = load_table(spark, sf_dir, "nation")
-    key = hashlib.md5(f"{sf_dir}/nation_bin".encode()).hexdigest()[:12]
-    path = f"{tempfile.gettempdir()}/pypiper_binfiles_{key}"
-    if not os.path.isdir(path):
-        staging = f"{path}.tmp"
-        os.makedirs(staging, exist_ok=True)
+    path = path_for(
+        "pypiper_binfiles", sf_dir, ("nation",), root=tempfile.gettempdir(), suffix=""
+    )
+
+    def write(out: str) -> None:
+        os.makedirs(out)
         for row in n.select("n_nationkey", "n_name").collect():  # 25 rows, bounded
-            with open(f"{staging}/{row['n_nationkey']}.bin", "wb") as f:
+            with open(f"{out}/{row['n_nationkey']}.bin", "wb") as f:
                 f.write(row["n_name"].encode("utf-8"))
-        os.replace(staging, path)
+
+    if not os.path.exists(path):
+        publish(path, write)
     back = spark.read.format("binaryFile").load(path)
     return back.agg(
         F.count(F.lit(1)).alias("n_files"),

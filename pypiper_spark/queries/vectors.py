@@ -16,6 +16,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pypiper_spark.artifacts import memo, path_for, publish
+
+# The artifact store under the names perfbench/spans.py traces it by.
+from pypiper_spark.artifacts import index_dir as _index_dir  # noqa: F401
+from pypiper_spark.artifacts import publish_df as _atomic_write_df  # noqa: F401
+from pypiper_spark.artifacts import publish_table as _atomic_write_table
 from pypiper_spark.catalog import load_table
 from pypiper_spark.functions.vectors import cosine, norm, sql_cosine, sql_dot, to_double
 from pypiper_spark.registry import register
@@ -140,18 +146,13 @@ def _exact_topk_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact flips exact_best_sim/exact_topk_sum/recall_ok."""
     import os
 
-    from pypiper_spark.fingerprint import corpus_key
-
     # Params fold into the key (ADVICE r10): a code change to the
     # probe set or k must force a rebuild, not serve stale anchors
     # from a warm .ann_index dir that only a downstream oracle
     # mismatch would expose.
-    key = corpus_key(
-        sf_dir,
-        f"exact_topk10:p{'-'.join(map(str, _PROBE_IDS))}:k10",
-        tables=("embeddings",),
+    path = path_for(
+        "bf", sf_dir, ("embeddings",), f"p{'-'.join(map(str, _PROBE_IDS))}:k10"
     )
-    path = os.path.join(_index_dir(), f"bf_{key}.parquet")
     if not os.path.exists(path):
         _atomic_write_table(
             sim_topk_bruteforce(spark, sf_dir).toArrow(), path
@@ -440,100 +441,10 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of the corpus (never the full data — at 100 TB the sample is a
 # fixed-size reservoir and this build is a cheap bounded job), WRITES
 # the centroids to a parquet artifact keyed by (corpus fingerprint,
-# params), and every later process — not just this one — loads the
-# artifact instead of re-fitting. The in-memory dict is only a
-# per-process fast path over the on-disk artifact.
+# params) through pypiper_spark.artifacts, and every later process —
+# not just this one — loads the artifact instead of re-fitting. The
+# artifact memo is only a per-process fast path over the file.
 # ---------------------------------------------------------------------------
-_IVF_CACHE: dict[str, list[list[float]]] = {}
-
-
-def _index_dir() -> str:
-    """Artifact root for persisted ANN indexes (centroids, codebooks).
-    Repo-local by default; a real deployment points this at the object
-    store next to the corpus."""
-    import os
-
-    d = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".ann_index"),
-    )
-    os.makedirs(d, exist_ok=True)
-    return d
-
-
-def _corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
-    """Cheap, deterministic corpus version id: size + mtime of the
-    parquet file (the 100 TB analog is the table's snapshot/commit id —
-    the point is that a changed corpus invalidates the artifact without
-    scanning it)."""
-    import os
-
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    return f"{st.st_size}:{st.st_mtime_ns}"
-
-
-def _artifact_path(kind: str, sf_dir: str, params: str) -> str:
-    import hashlib
-    import os
-
-    key = f"{kind}|{sf_dir}|{_corpus_fingerprint(sf_dir)}|{params}"
-    h = hashlib.sha1(key.encode()).hexdigest()[:16]
-    return os.path.join(_index_dir(), f"{kind}_{h}.parquet")
-
-
-def _atomic_write_table(table, path: str) -> None:
-    """Write a parquet artifact atomically: temp file in the same
-    directory, then os.replace() into place. A crash mid-write must
-    never leave a truncated file at the fingerprint-stable path (the
-    exists() check would treat it as valid forever); replace() also
-    makes concurrent writers last-wins-safe."""
-    import os
-    import tempfile
-
-    import pyarrow.parquet as pq_
-
-    fd, tmp = tempfile.mkstemp(
-        dir=os.path.dirname(path), prefix=".tmp_", suffix=".parquet"
-    )
-    os.close(fd)
-    try:
-        pq_.write_table(table, tmp)
-        os.replace(tmp, path)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-
-
-def _atomic_write_df(df: DataFrame, path: str) -> None:
-    """Spark-side atomic artifact write for CORPUS-SIZED artifacts
-    (the HNSW posting assignment): executors write directory-style
-    parquet with df.write — the frame never lands on the driver —
-    then one rename() publishes it at the fingerprint-stable path
-    (atomic on the same filesystem; pyarrow and spark.read both
-    handle the directory form). If a concurrent builder won the
-    publish race, this build's output is discarded — last-writer
-    semantics identical to _atomic_write_table's replace()."""
-    import os
-    import shutil
-    import tempfile
-
-    parent = os.path.dirname(path)
-    staging = tempfile.mkdtemp(dir=parent, prefix=".tmpdir_")
-    try:
-        out = os.path.join(staging, "data")
-        df.write.mode("overwrite").parquet(out)
-        try:
-            os.rename(out, path)
-        except OSError:
-            # EEXIST/ENOTEMPTY = a concurrent builder won the publish
-            # race (last-writer semantics, fine). Any OTHER failure
-            # (perms, stale plain file at path → ENOTDIR) must NOT be
-            # swallowed: callers cache (path, ...) tuples and every
-            # later read would fail confusingly — ADVICE r11.
-            if not os.path.exists(path):
-                raise
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
 
 
 def build_ivf_index(
@@ -549,43 +460,39 @@ def build_ivf_index(
     queries without re-running KMeans (tested in
     tests/test_approx_ops.py::test_ivf_index_artifact_survives_cold_start).
     Bounded: the fit input is a sample, the output is k x 64 floats."""
-    # The memo key must be IDENTICAL to the artifact key: keying on
-    # fewer params than _artifact_path would let a warm second build
-    # with a different seed/fraction return the first build's centroids
-    # while a cold process reads the correct per-seed artifact.
-    params = f"k={k}:frac={sample_fraction}:seed={seed}"
-    key = f"{sf_dir}|{params}"
-    if key in _IVF_CACHE:
-        return _IVF_CACHE[key]
-    path = _artifact_path("ivf", sf_dir, params)
     import os
 
     import pyarrow.parquet as pq
 
-    if os.path.exists(path):
+    path = path_for(
+        "ivf", sf_dir, ("embeddings",), f"k={k}:frac={sample_fraction}:seed={seed}"
+    )
+
+    def load() -> list[list[float]]:
+        if not os.path.exists(path):
+            import pyarrow as pa
+            from pyspark.ml.clustering import KMeans
+            from pyspark.ml.functions import array_to_vector
+
+            sample = load_table(spark, sf_dir, "embeddings").sample(
+                fraction=sample_fraction, seed=seed
+            )
+            fe = sample.select(
+                array_to_vector(F.col("embedding").cast("array<double>")).alias(
+                    "features"
+                )
+            )
+            model = KMeans(k=k, seed=seed, maxIter=10).fit(fe)
+            cents = [[float(x) for x in c] for c in model.clusterCenters()]
+            _atomic_write_table(
+                pa.table({"cluster_id": list(range(len(cents))), "centroid": cents}),
+                path,
+            )
         t = pq.read_table(path).to_pydict()
         order = sorted(range(len(t["cluster_id"])), key=t["cluster_id"].__getitem__)
-        _IVF_CACHE[key] = [list(map(float, t["centroid"][i])) for i in order]
-        return _IVF_CACHE[key]
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+        return [list(map(float, t["centroid"][i])) for i in order]
 
-    sample = load_table(spark, sf_dir, "embeddings").sample(
-        fraction=sample_fraction, seed=seed
-    )
-    fe = sample.select(
-        array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=k, seed=seed, maxIter=10).fit(fe)
-    cents = [[float(x) for x in c] for c in model.clusterCenters()]
-    import pyarrow as pa
-
-    _atomic_write_table(
-        pa.table({"cluster_id": list(range(len(cents))), "centroid": cents}),
-        path,
-    )
-    _IVF_CACHE[key] = cents
-    return cents
+    return memo(path, load)
 
 
 def _nearest_centroid_udf(centroids: list[list[float]]):
@@ -780,7 +687,82 @@ def multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 _PQ_M = 8  # subspaces
 _PQ_K = 16  # centroids per subspace (4-bit codes)
-_PQ_CACHE: dict[str, list[list[list[float]]]] = {}
+
+
+def _codebooks(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    m: int,
+    k: int,
+    sample_rows: int,
+    seed: int,
+    iters: int,
+    centroids: list[list[float]] | None = None,
+) -> list[list[list[float]]]:
+    """Seeded bounded sample (collect of sample_rows vectors — the
+    'reservoir', same boundedness argument as the IVF sample), then
+    per-subspace Lloyd iterations in numpy, fitted on the residuals
+    against ``centroids`` when given. Persisted parquet artifact
+    (subspace, code, centroid) keyed by corpus fingerprint + every
+    param, so a cold process never re-runs Lloyd."""
+    import os
+
+    import pyarrow.parquet as pq_
+
+    params = f"m={m}:k={k}:n={sample_rows}:seed={seed}:iters={iters}"
+    if centroids is not None:
+        # different coarse quantizers give different residuals
+        params += f":ivfk={len(centroids)}"
+    path = path_for(kind, sf_dir, ("embeddings",), params)
+
+    def load() -> list[list[list[float]]]:
+        if not os.path.exists(path):
+            import pyarrow as pa
+
+            rows = (
+                load_table(spark, sf_dir, "embeddings")
+                .select("embedding")
+                .orderBy(F.xxhash64(F.lit(seed), "vec_id"))
+                .limit(sample_rows)
+                .collect()
+            )
+            x = np.array([r.embedding for r in rows], dtype=np.float64)
+            if centroids is not None:
+                C = np.array(centroids, dtype=np.float64)
+                d2 = (x * x).sum(1, keepdims=True) - 2 * x @ C.T + (C * C).sum(1)
+                x = x - C[d2.argmin(axis=1)]
+            d_sub = x.shape[1] // m
+            books = []
+            rng = np.random.RandomState(seed)
+            for mi in range(m):
+                sub = x[:, mi * d_sub : (mi + 1) * d_sub]
+                cents = sub[rng.choice(len(sub), size=k, replace=False)].copy()
+                for _ in range(iters):
+                    dd = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+                    assign = dd.argmin(axis=1)
+                    for ci in range(k):
+                        mask = assign == ci
+                        if mask.any():
+                            cents[ci] = sub[mask].mean(axis=0)
+                books.append([[float(v) for v in c] for c in cents])
+            _atomic_write_table(
+                pa.table(
+                    {
+                        "subspace": [mi for mi in range(m) for _ in range(k)],
+                        "code": [ci for _ in range(m) for ci in range(k)],
+                        "centroid": [books[mi][ci] for mi in range(m) for ci in range(k)],
+                    }
+                ),
+                path,
+            )
+        t = pq_.read_table(path).to_pydict()
+        books = [[None] * k for _ in range(m)]
+        for mi, ci, c in zip(t["subspace"], t["code"], t["centroid"]):
+            books[mi][ci] = list(map(float, c))
+        return books
+
+    return memo(path, load)
 
 
 def build_pq_codebooks(
@@ -792,66 +774,12 @@ def build_pq_codebooks(
     seed: int = 7,
     iters: int = 8,
 ) -> list[list[list[float]]]:
-    """Offline PQ codebook build: seeded bounded sample (collect of
-    sample_rows vectors — the 'reservoir', same boundedness argument as
-    the IVF sample), per-subspace Lloyd iterations in numpy, memoized.
+    """Offline PQ codebook build (see _codebooks), memoized.
     Returns codebooks[m][k] = 8-dim centroid. Like the IVF centroids,
     the codebooks are a PERSISTED parquet artifact (subspace, code,
     centroid) keyed by corpus fingerprint + params, so a cold process
     never re-runs Lloyd (tested in tests/test_approx_ops.py)."""
-    # Memo key == artifact key (same rule as _IVF_CACHE above).
-    params = f"m={m}:k={k}:n={sample_rows}:seed={seed}:iters={iters}"
-    key = f"{sf_dir}|{params}"
-    if key in _PQ_CACHE:
-        return _PQ_CACHE[key]
-    path = _artifact_path("pq", sf_dir, params)
-    import os
-
-    import pyarrow.parquet as pq_
-
-    if os.path.exists(path):
-        t = pq_.read_table(path).to_pydict()
-        books = [[None] * k for _ in range(m)]  # type: ignore[list-item]
-        for mi, ci, c in zip(t["subspace"], t["code"], t["centroid"]):
-            books[mi][ci] = list(map(float, c))
-        _PQ_CACHE[key] = books  # type: ignore[assignment]
-        return _PQ_CACHE[key]
-    rows = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("embedding")
-        .orderBy(F.xxhash64(F.lit(seed), "vec_id"))
-        .limit(sample_rows)
-        .collect()
-    )
-    x = np.array([r.embedding for r in rows], dtype=np.float64)
-    d_sub = x.shape[1] // m
-    books = []
-    rng = np.random.RandomState(seed)
-    for mi in range(m):
-        sub = x[:, mi * d_sub : (mi + 1) * d_sub]
-        cents = sub[rng.choice(len(sub), size=k, replace=False)].copy()
-        for _ in range(iters):
-            d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for ci in range(k):
-                mask = assign == ci
-                if mask.any():
-                    cents[ci] = sub[mask].mean(axis=0)
-        books.append([[float(v) for v in c] for c in cents])
-    import pyarrow as pa
-
-    _atomic_write_table(
-        pa.table(
-            {
-                "subspace": [mi for mi in range(m) for _ in range(k)],
-                "code": [ci for _ in range(m) for ci in range(k)],
-                "centroid": [books[mi][ci] for mi in range(m) for ci in range(k)],
-            }
-        ),
-        path,
-    )
-    _PQ_CACHE[key] = books
-    return _PQ_CACHE[key]
+    return _codebooks(spark, sf_dir, "pq", m, k, sample_rows, seed, iters)
 
 
 def _pq_encode_udf(books: list[list[list[float]]]):
@@ -1031,8 +959,6 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same 4-bit budget quantizes them with far less error — the reason
 # IVFADC beats flat PQ at equal bits.
 # ---------------------------------------------------------------------------
-_IVFPQ_CACHE: dict[str, list[list[list[float]]]] = {}
-
 # IVFADC query knobs (module-level so the recall sweep in
 # tools/experiment scripts and tests can exercise the same code path):
 # scan fraction = _IVFPQ_NPROBE / _IVFPQ_K.
@@ -1072,64 +998,10 @@ def build_ivfpq_codebooks(
     RESIDUALS against the IVF centroids. Persisted parquet artifact
     keyed by corpus fingerprint + params (incl. the coarse k, since
     different coarse quantizers give different residual distributions);
-    memo key == artifact key (the standing _IVF_CACHE rule)."""
-    params = (
-        f"m={m}:k={k}:n={sample_rows}:seed={seed}:iters={iters}:ivfk={len(centroids)}"
+    memo key == artifact path."""
+    return _codebooks(
+        spark, sf_dir, "ivfpq", m, k, sample_rows, seed, iters, centroids=centroids
     )
-    key = f"{sf_dir}|{params}"
-    if key in _IVFPQ_CACHE:
-        return _IVFPQ_CACHE[key]
-    path = _artifact_path("ivfpq", sf_dir, params)
-    import os
-
-    import pyarrow.parquet as pq_
-
-    if os.path.exists(path):
-        t = pq_.read_table(path).to_pydict()
-        books = [[None] * k for _ in range(m)]  # type: ignore[list-item]
-        for mi, ci, c in zip(t["subspace"], t["code"], t["centroid"]):
-            books[mi][ci] = list(map(float, c))
-        _IVFPQ_CACHE[key] = books  # type: ignore[assignment]
-        return _IVFPQ_CACHE[key]
-    rows = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("embedding")
-        .orderBy(F.xxhash64(F.lit(seed), "vec_id"))
-        .limit(sample_rows)
-        .collect()
-    )
-    x = np.array([r.embedding for r in rows], dtype=np.float64)
-    C = np.array(centroids, dtype=np.float64)
-    d2 = (x * x).sum(1, keepdims=True) - 2 * x @ C.T + (C * C).sum(1)
-    res = x - C[d2.argmin(axis=1)]
-    d_sub = x.shape[1] // m
-    books = []
-    rng = np.random.RandomState(seed)
-    for mi in range(m):
-        sub = res[:, mi * d_sub : (mi + 1) * d_sub]
-        cents = sub[rng.choice(len(sub), size=k, replace=False)].copy()
-        for _ in range(iters):
-            dd = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = dd.argmin(axis=1)
-            for ci in range(k):
-                mask = assign == ci
-                if mask.any():
-                    cents[ci] = sub[mask].mean(axis=0)
-        books.append([[float(v) for v in c] for c in cents])
-    import pyarrow as pa
-
-    _atomic_write_table(
-        pa.table(
-            {
-                "subspace": [mi for mi in range(m) for _ in range(k)],
-                "code": [ci for _ in range(m) for ci in range(k)],
-                "centroid": [books[mi][ci] for mi in range(m) for ci in range(k)],
-            }
-        ),
-        path,
-    )
-    _IVFPQ_CACHE[key] = books
-    return _IVFPQ_CACHE[key]
 
 
 def _ivfpq_encode_udf(centroids: list[list[float]], books: list[list[list[float]]]):
@@ -1378,28 +1250,25 @@ _HNSW_T0 = 3  # frontier-join expansion rounds after seeding
 #   1.00 at 100x with T0=3)
 _HNSW_RECALL_FLOOR = 0.90
 
-_HNSW_CACHE: dict[str, tuple] = {}
-
 
 def build_hnsw_graph(spark: SparkSession, sf_dir: str):
     """Build (or load) the persisted HNSW artifacts. Returns
     (edges_path, seeds_path, assign_path, n_nodes).
 
-    Three parquet artifacts keyed by corpus fingerprint + params:
-    - hnswE: (src, dst, dst_emb) kNN neighbor lists over the node
+    One artifact directory keyed by corpus fingerprint + params,
+    published whole, holding three parquet tables:
+    - edges: (src, dst, dst_emb) kNN neighbor lists over the node
       set, destination embeddings denormalized in so frontier
       expansion never joins the corpus table;
-    - hnswS: (node_id, emb) the top-layer seed nodes (a deterministic
+    - seeds: (node_id, emb) the top-layer seed nodes (a deterministic
       spread subset, ~n_nodes/_HNSW_SEED_DIV rows) scored exhaustively
       by the query's seed round;
-    - hnswA: (vec_id, node_id) posting assignment (identity when
+    - assign: (vec_id, node_id) posting assignment (identity when
       every distinct vector is a node)."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq_
-
-    from pypiper_spark.fingerprint import corpus_key
 
     # v4 (VERDICT r10 #1 — driver-bound the build): v3 pulled the FULL
     # embeddings table through the driver (toPandas before the
@@ -1423,16 +1292,13 @@ def build_hnsw_graph(spark: SparkSession, sf_dir: str):
     # r10 sweep showed seeding is insensitive to the spread mechanism
     # (seed sets of 224-893 nodes all read recall 1.00).
     params = f"v4_M{_HNSW_M}_d{_HNSW_SEED_DIV}_cap{_HNSW_SAMPLE_CAP}"
-    key = corpus_key(sf_dir, f"hnsw_{params}", tables=("embeddings",))
-    if key in _HNSW_CACHE:
-        return _HNSW_CACHE[key]
-    d = _index_dir()
-    epath = os.path.join(d, f"hnswE_{key}.parquet")
-    spath = os.path.join(d, f"hnswS_{key}.parquet")
-    apath = os.path.join(d, f"hnswA_{key}.parquet")
-    if not (
-        os.path.exists(epath) and os.path.exists(spath) and os.path.exists(apath)
-    ):
+    path = path_for("hnsw", sf_dir, ("embeddings",), params, suffix="")
+    epath, spath, apath = (
+        os.path.join(path, f"{t}.parquet") for t in ("edges", "seeds", "assign")
+    )
+
+    def write(out: str) -> None:
+        os.makedirs(out)
         e = load_table(spark, sf_dir, "embeddings")
         stats = e.agg(
             F.count(F.lit(1)).alias("n"),
@@ -1482,7 +1348,7 @@ def build_hnsw_graph(spark: SparkSession, sf_dir: str):
         # an empty edge table with the full schema, not a crash
         src_rows = np.array(srcs, dtype=np.int64)
         dst_rows = np.array(dsts, dtype=np.int64)
-        _atomic_write_table(
+        pq_.write_table(
             pa.table(
                 {
                     "src": pa.array(node_ids[src_rows], type=pa.int64()),
@@ -1493,14 +1359,14 @@ def build_hnsw_graph(spark: SparkSession, sf_dir: str):
                     ),
                 }
             ),
-            epath,
+            os.path.join(out, "edges.parquet"),
         )
         # top layer: a spread stride subset, entered by exhaustive
         # scoring — its embeddings ride in the artifact
         n_seeds = min(nn, max(_HNSW_SEED_DIV, nn // _HNSW_SEED_DIV))
         sstride = max(1, nn // max(n_seeds, 1))
         seed_rows = np.arange(nn, dtype=np.int64)[::sstride]
-        _atomic_write_table(
+        pq_.write_table(
             pa.table(
                 {
                     "node_id": pa.array(node_ids[seed_rows], type=pa.int64()),
@@ -1510,7 +1376,7 @@ def build_hnsw_graph(spark: SparkSession, sf_dir: str):
                     ),
                 }
             ),
-            spath,
+            os.path.join(out, "seeds.parquet"),
         )
         if stride == 1 and nn == n_corpus:
             # every vector is its own (distinct) node
@@ -1537,17 +1403,21 @@ def build_hnsw_graph(spark: SparkSession, sf_dir: str):
             assign_df = e.select(
                 "vec_id", nearest_udf("embedding").alias("node_id")
             )
-        _atomic_write_df(assign_df, apath)
-    # n_nodes from the bounded edge artifact (<= cap * M rows); a
-    # degenerate single-node graph has no edges — fall back to the
-    # seed table (also bounded), which always carries >= 1 node.
-    src_col = pq_.read_table(epath, columns=["src"]).column("src")
-    n_nodes = len(src_col.unique()) or pq_.read_table(
-        spath, columns=["node_id"]
-    ).num_rows
-    out = (epath, spath, apath, n_nodes)
-    _HNSW_CACHE[key] = out
-    return out
+        assign_df.write.parquet(os.path.join(out, "assign.parquet"))
+
+    def load() -> tuple:
+        if not os.path.exists(path):
+            publish(path, write)
+        # n_nodes from the bounded edge artifact (<= cap * M rows); a
+        # degenerate single-node graph has no edges — fall back to the
+        # seed table (also bounded), which always carries >= 1 node.
+        src_col = pq_.read_table(epath, columns=["src"]).column("src")
+        n_nodes = len(src_col.unique()) or pq_.read_table(
+            spath, columns=["node_id"]
+        ).num_rows
+        return (epath, spath, apath, n_nodes)
+
+    return memo(path, load)
 
 
 def _seq_dot(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
@@ -1560,49 +1430,45 @@ def _seq_dot(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
     return np.cumsum(a * b, axis=-1)[..., -1]
 
 
-_HNSW_GRAPH_MEMO: dict[str, tuple] = {}
-
-
 def _load_hnsw_graph_arrays(epath: str, spath: str) -> tuple:
     """The bounded graph artifacts as driver numpy arrays (memoized per
-    artifact path — index-artifact lifecycle, same as _HNSW_CACHE).
+    artifact path, like build_hnsw_graph itself).
     Bounded BY CONSTRUCTION: <= _HNSW_SAMPLE_CAP * _HNSW_M edge rows at
     any corpus size, so this is not a corpus-sized driver
     materialization. Edges come back grouped by src (stable argsort +
     searchsorted slices); dst embeddings and their fold-norms are
     precomputed once."""
-    key = f"{epath}|{spath}"
-    if key in _HNSW_GRAPH_MEMO:
-        return _HNSW_GRAPH_MEMO[key]
-    import pyarrow.parquet as pq_
 
-    et = pq_.read_table(epath)
-    src = et.column("src").to_numpy()
-    dst = et.column("dst").to_numpy()
-    demb_col = et.column("dst_emb").combine_chunks()
-    if et.num_rows:
-        demb = np.asarray(demb_col.flatten()).reshape(et.num_rows, -1)
-    else:
-        demb = np.zeros((0, 1), dtype=np.float64)
-    order = np.argsort(src, kind="stable")
-    src, dst, demb = src[order], dst[order], demb[order]
-    dnorm = np.sqrt(_seq_dot(demb, demb))
-    group_keys = np.unique(src)
-    starts = np.searchsorted(src, group_keys, side="left")
-    ends = np.searchsorted(src, group_keys, side="right")
-    slices = {int(k): (int(s), int(e)) for k, s, e in zip(group_keys, starts, ends)}
-    st = pq_.read_table(spath)
-    seed_ids = st.column("node_id").to_numpy()
-    if st.num_rows:
-        semb = np.asarray(st.column("emb").combine_chunks().flatten()).reshape(
-            st.num_rows, -1
-        )
-    else:
-        semb = np.zeros((0, 1), dtype=np.float64)
-    snorm = np.sqrt(_seq_dot(semb, semb))
-    out = (slices, dst, demb, dnorm, seed_ids, semb, snorm)
-    _HNSW_GRAPH_MEMO[key] = out
-    return out
+    def load() -> tuple:
+        import pyarrow.parquet as pq_
+
+        et = pq_.read_table(epath)
+        src = et.column("src").to_numpy()
+        dst = et.column("dst").to_numpy()
+        demb_col = et.column("dst_emb").combine_chunks()
+        if et.num_rows:
+            demb = np.asarray(demb_col.flatten()).reshape(et.num_rows, -1)
+        else:
+            demb = np.zeros((0, 1), dtype=np.float64)
+        order = np.argsort(src, kind="stable")
+        src, dst, demb = src[order], dst[order], demb[order]
+        dnorm = np.sqrt(_seq_dot(demb, demb))
+        group_keys = np.unique(src)
+        starts = np.searchsorted(src, group_keys, side="left")
+        ends = np.searchsorted(src, group_keys, side="right")
+        slices = {int(k): (int(s), int(e)) for k, s, e in zip(group_keys, starts, ends)}
+        st = pq_.read_table(spath)
+        seed_ids = st.column("node_id").to_numpy()
+        if st.num_rows:
+            semb = np.asarray(st.column("emb").combine_chunks().flatten()).reshape(
+                st.num_rows, -1
+            )
+        else:
+            semb = np.zeros((0, 1), dtype=np.float64)
+        snorm = np.sqrt(_seq_dot(semb, semb))
+        return (slices, dst, demb, dnorm, seed_ids, semb, snorm)
+
+    return memo(epath, load)
 
 
 def _sim_ann_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1624,11 +1490,12 @@ def _sim_ann_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size — the same boundedness that already justified
     collecting the node sample in the build and the probe rows here);
     everything corpus-scaled (posting assignment, exact rerank) stays
-    distributed. Bit-equivalence with the join form: cosines use the
-    same sequential-fold arithmetic (_seq_dot), the dedup keeps the
-    max of identical values, and the top-ef cut sorts by the identical
-    (-sim, node) key — pinned by tests/test_r13_optimizations.py
-    against a literal DataFrame replay of the old plan."""
+    distributed. Equivalence with the join form rests on the same
+    arithmetic and ordering: cosines use the sequential fold of
+    functions.vectors.dot (_seq_dot; its bit-equality with the Spark
+    fold is what tests/test_r13_optimizations.py pins), the dedup keeps
+    the max of identical values, and the top-ef cut sorts by the
+    identical (-sim, node) key."""
     epath, spath, apath, _ = build_hnsw_graph(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings")
     probe_rows = (

@@ -148,7 +148,7 @@ def _stream_scope(spark: SparkSession, sf_dir: str, table: str = "events"):
     so batch queries keep the session's own sizing. ``table`` names the
     stream's actual SOURCE table (ADVICE r12: cdc-upsert stages from
     orders, corpus-build from documents — sizing must track the file
-    the stream replays, mirroring _staging_key)."""
+    the stream replays, mirroring _staged_replay's key)."""
     return scoped_confs(
         spark,
         {
@@ -159,50 +159,43 @@ def _stream_scope(spark: SparkSession, sf_dir: str, table: str = "events"):
     )
 
 
-def _staging_key(sf_dir: str, table: str = "events") -> str:
-    """Staging-dir key carrying the SOURCE fingerprint (size + mtime),
-    so a regenerated corpus can never be served a stale staged replay
-    — and an unchanged corpus reuses its staged files across calls
-    instead of rebuilding them per run."""
-    try:
-        st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-        fp = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fp = "nofp"
-    return hashlib.md5(f"{sf_dir}|{table}|{fp}".encode()).hexdigest()[:8]
-
-
-def _stage_slices(df: DataFrame, stage: str, n: int, pred, project=None) -> None:
-    """Stage ``df`` as n deterministic mtime-ordered parquet files
-    (batch k = rows where pred(k), projected to ``project`` columns
-    when given), written by EXECUTORS (coalesce(1) per slice +
-    single-part move — never a driver materialization). Reuses an
-    existing staging dir only when its file set is EXACTLY the n
-    expected batches (ADVICE r12: a presence-only check would silently
-    replay stale EXTRA slices left by an older run with a larger n,
-    since the directory-based readStream ingests every file)."""
+def _staged_replay(
+    sf_dir: str, table: str, label: str, n: int, batch: Callable[[int], DataFrame]
+) -> str:
+    """Deterministic replay source for a twin stream: a directory of n
+    parquet files, file k holding ``batch(k)``, with ascending mtimes so
+    a file source with maxFilesPerTrigger=1 replays them in order.
+    Written by EXECUTORS (coalesce(1) per batch + single-part move —
+    never a driver materialization). The directory is a corpus artifact
+    keyed on the SOURCE ``table``, ``label`` and n: published whole
+    under the temp dir once, then reused by every later call, and a
+    regenerated corpus or another batch count gets a fresh one."""
     import shutil
 
-    names = [f"batch{k}.parquet" for k in range(n)]
-    if os.path.isdir(stage) and sorted(os.listdir(stage)) == sorted(names):
-        return
-    if os.path.isdir(stage):
-        shutil.rmtree(stage)
-    os.makedirs(stage, exist_ok=True)
-    base = 1_000_000_000
-    for k in range(n):
-        scratch = os.path.join(stage, f".tmp{k}")
-        part_df = df.filter(pred(k))
-        if project is not None:
-            part_df = part_df.select(*project)
-        part_df.coalesce(1).write.mode("overwrite").parquet(scratch)
-        part = next(
-            f for f in sorted(os.listdir(scratch)) if f.endswith(".parquet")
-        )
-        path = os.path.join(stage, names[k])
-        os.replace(os.path.join(scratch, part), path)
-        shutil.rmtree(scratch, ignore_errors=True)
-        os.utime(path, (base + 60 * k, base + 60 * k))
+    from pypiper_spark.artifacts import path_for, publish
+
+    path = path_for(
+        f"pypiper_{label}_src", sf_dir, (table,), f"n={n}",
+        root=tempfile.gettempdir(), suffix="",
+    )
+
+    def write(out: str) -> None:
+        os.makedirs(out)
+        base = 1_000_000_000
+        for k in range(n):
+            scratch = os.path.join(out, f".tmp{k}")
+            batch(k).coalesce(1).write.parquet(scratch)
+            part = next(
+                f for f in sorted(os.listdir(scratch)) if f.endswith(".parquet")
+            )
+            dest = os.path.join(out, f"batch{k}.parquet")
+            os.rename(os.path.join(scratch, part), dest)
+            shutil.rmtree(scratch)
+            os.utime(dest, (base + 60 * k, base + 60 * k))
+
+    if not os.path.exists(path):
+        publish(path, write)
+    return path
 
 
 # Evidence hook (r13, VERDICT r12 next #10): recentProgress of the
@@ -302,20 +295,15 @@ def run_late_accounting_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_runtime_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     eb = _late_batched(ev).select("ts", "batch")
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"pypiper_late_{_staging_key(sf_dir)}",
-    )
     # r12 optimization: the old path pulled each batch through the
     # driver (4 toPandas + pyarrow writes PER CALL); slices are now
-    # executor-written and the fingerprint-keyed dir is reused across
-    # calls (load_table yields timestamp_ntz -> Spark writes
+    # executor-written and the staged dir is reused across calls
+    # (load_table yields timestamp_ntz -> Spark writes
     # TIMESTAMP(MICROS, isAdjustedToUTC=false), the physical type the
     # stream schema declares — same bytes the pyarrow cast produced)
-    _stage_slices(
-        eb, stage, _LATE_N_BATCHES,
-        lambda k: F.col("batch") == k,
-        project=["ts"],
+    stage = _staged_replay(
+        sf_dir, "events", "late", _LATE_N_BATCHES,
+        lambda k: eb.filter(F.col("batch") == k).select("ts"),
     )
     raw = (
         spark.readStream.schema(T.StructType([T.StructField("ts", T.TimestampNTZType())]))
@@ -651,20 +639,18 @@ def run_foreachbatch_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the source slices batches — which is what the exact oracle
     states."""
     apply_runtime_confs(spark)
-    key = _staging_key(sf_dir)
-    stage = os.path.join(tempfile.gettempdir(), f"pypiper_feb_src_{key}")
-    state = os.path.join(tempfile.gettempdir(), f"pypiper_feb_state_{key}_{uuid.uuid4().hex[:8]}")
+    state = os.path.join(
+        tempfile.gettempdir(), f"pypiper_feb_state_{uuid.uuid4().hex[:8]}"
+    )
     import shutil
 
     from pypiper_spark.catalog import load_table
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
     n_batches = 4
-    # fingerprint-keyed staging reuse + executor writes (see
-    # run_table_ingest_stream — same r12 rework, same reasons)
-    _stage_slices(
-        ev, stage, n_batches,
-        lambda k: F.col("event_id") % n_batches == k,
+    stage = _staged_replay(
+        sf_dir, "events", "feb", n_batches,
+        lambda k: ev.filter(F.col("event_id") % n_batches == k),
     )
 
     schema = T.StructType(
@@ -816,26 +802,22 @@ def run_table_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pypiper_spark.catalog import load_table
 
     apply_runtime_confs(spark)
-    key = _staging_key(sf_dir)
-    stage = os.path.join(tempfile.gettempdir(), f"pypiper_tbi_src_{key}")
     root = os.path.join(
-        tempfile.gettempdir(), f"pypiper_tbi_tbl_{key}_{uuid.uuid4().hex[:8]}"
+        tempfile.gettempdir(), f"pypiper_tbi_tbl_{uuid.uuid4().hex[:8]}"
     )
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
     n_batches = 4
     # r12 optimization: staging is deterministic per corpus (fixed
-    # mtimes, hash-split slices), so key it on the SOURCE FINGERPRINT
-    # (size+mtime — a changed corpus gets a fresh dir) and reuse it
-    # across calls instead of rebuilding per call; and write the slices
-    # from EXECUTORS (coalesce(1).write + single-part move, the
-    # run_stream_corpus_build pattern) instead of pulling the full
-    # events table through the driver with toPandas (guide §5 — the
-    # old path was data-scaled driver materialization).
-    _stage_slices(
-        ev, stage, n_batches,
-        lambda k: F.col("event_id") % n_batches == k,
+    # mtimes, hash-split slices), so it is a corpus artifact reused
+    # across calls instead of rebuilt per call; and the slices are
+    # written from EXECUTORS instead of pulling the full events table
+    # through the driver with toPandas (the old path was data-scaled
+    # driver materialization).
+    stage = _staged_replay(
+        sf_dir, "events", "tbi", n_batches,
+        lambda k: ev.filter(F.col("event_id") % n_batches == k),
     )
 
     schema = T.StructType(
@@ -901,8 +883,6 @@ def run_stream_corpus_build(spark: SparkSession, sf_dir: str, root: str) -> None
     data already arrives as files/streams; this harness only
     manufactures a deterministic arrival order the oracle can replay.
     """
-    import shutil
-
     from pypiper_spark import tableformat as tf
     from pypiper_spark.catalog import load_table
     from pypiper_spark.queries.snapshots import (
@@ -913,34 +893,13 @@ def run_stream_corpus_build(spark: SparkSession, sf_dir: str, root: str) -> None
     )
 
     apply_runtime_confs(spark)
-    key = _staging_key(sf_dir, "documents")  # r12: fingerprint-keyed staging
-    stage = os.path.join(tempfile.gettempdir(), f"pypiper_spc2_src_{key}")
-    names = [f"batch{k}.parquet" for k in range(_SPIPE_BATCHES)]
-    if not (
-        os.path.isdir(stage) and sorted(os.listdir(stage)) == sorted(names)
-    ):  # exact-set staging check (ADVICE r12; see _stage_slices)
-        if os.path.isdir(stage):
-            shutil.rmtree(stage)
-        os.makedirs(stage, exist_ok=True)
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "source", "text"
-        )
-        base = 1_000_000_000
-        for k in range(_SPIPE_BATCHES):
-            scratch = os.path.join(stage, f".tmp{k}")
-            (
-                docs.filter(_spipe_batch_col() == k)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(scratch)
-            )
-            part = next(
-                f for f in sorted(os.listdir(scratch)) if f.endswith(".parquet")
-            )
-            path = os.path.join(stage, names[k])
-            os.replace(os.path.join(scratch, part), path)
-            shutil.rmtree(scratch, ignore_errors=True)
-            os.utime(path, (base + 60 * k, base + 60 * k))
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "source", "text"
+    )
+    stage = _staged_replay(
+        sf_dir, "documents", "spc2", _SPIPE_BATCHES,
+        lambda k: docs.filter(_spipe_batch_col() == k),
+    )
 
     schema = T.StructType(
         [
@@ -1018,9 +977,8 @@ def run_concurrent_ingest_streams(spark: SparkSession, sf_dir: str) -> DataFrame
     from pypiper_spark.catalog import load_table
 
     apply_runtime_confs(spark)
-    key = _staging_key(sf_dir)  # r12: fingerprint-keyed staging
     root = os.path.join(
-        tempfile.gettempdir(), f"pypiper_cci_tbl_{key}_{uuid.uuid4().hex[:8]}"
+        tempfile.gettempdir(), f"pypiper_cci_tbl_{uuid.uuid4().hex[:8]}"
     )
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
@@ -1037,34 +995,13 @@ def run_concurrent_ingest_streams(spark: SparkSession, sf_dir: str) -> DataFrame
     # writer needs the create path (create is single-winner by design)
     tf.create(spark, root, spark.createDataFrame([], schema))
 
-    stages = {}
-    base = 1_000_000_000
-    for app, slices in (("writerA", (0, 1)), ("writerB", (2, 3))):
-        stage = os.path.join(
-            tempfile.gettempdir(), f"pypiper_cci_src_{key}_{app}"
+    stages = {
+        app: _staged_replay(
+            sf_dir, "events", f"cci_{app}", len(slices),
+            lambda i, slices=slices: ev.filter(F.col("event_id") % 4 == slices[i]),
         )
-        names = [f"batch{i}.parquet" for i in range(len(slices))]
-        if not all(os.path.exists(os.path.join(stage, n)) for n in names):
-            if os.path.isdir(stage):
-                shutil.rmtree(stage)
-            os.makedirs(stage, exist_ok=True)
-            for i, k in enumerate(slices):
-                scratch = os.path.join(stage, f".tmp{i}")
-                (
-                    ev.filter(F.col("event_id") % 4 == k)
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(scratch)
-                )
-                part = next(
-                    f for f in sorted(os.listdir(scratch))
-                    if f.endswith(".parquet")
-                )
-                path = os.path.join(stage, names[i])
-                os.replace(os.path.join(scratch, part), path)
-                shutil.rmtree(scratch, ignore_errors=True)
-                os.utime(path, (base + 60 * i, base + 60 * i))
-        stages[app] = stage
+        for app, slices in (("writerA", (0, 1)), ("writerB", (2, 3)))
+    }
 
     def make_sink(app: str):
         def ingest(batch_df: DataFrame, batch_id: int) -> None:
@@ -1153,10 +1090,10 @@ def run_cdc_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
 
     from pypiper_spark import tableformat as tf
+    from pypiper_spark.artifacts import path_for, publish
     from pypiper_spark.catalog import load_table
 
     apply_runtime_confs(spark)
-    key = _staging_key(sf_dir, "orders")  # r12: fingerprint-keyed staging
     o = load_table(spark, sf_dir, "orders")
     base = o.select(
         "o_orderkey",
@@ -1166,7 +1103,7 @@ def run_cdc_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (VERDICT r12 next #7): the full-orders tf.create was the
     # query's per-call floor (~a full table write per run). The
     # snapshot-1 base table is now a PRISTINE per-corpus artifact
-    # (fingerprint-keyed, the staging/ANN-index lifecycle) built once;
+    # (pypiper_spark.artifacts, like the staged replay) built once;
     # each call works on a HARDLINK clone — safe because the format
     # never mutates a committed file in place (manifests are O_EXCL
     # creations, data/delta/dv files get fresh names, and the CURRENT
@@ -1175,16 +1112,20 @@ def run_cdc_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # region keeps the 3-batch MOR upsert, the exactly-once txn checks
     # and the final read — only the immutable starting snapshot is
     # amortized, exactly like the staged replay files it sits beside.
-    pristine = os.path.join(tempfile.gettempdir(), f"pypiper_cdcu_base_{key}")
-    if not os.path.exists(os.path.join(pristine, "CURRENT")):
-        build = pristine + f".build_{uuid.uuid4().hex[:8]}"
-        tf.create(spark, build, base)
-        try:
-            os.rename(build, pristine)
-        except OSError:  # lost a build race: keep the winner's table
-            shutil.rmtree(build, ignore_errors=True)
+    # The clone must share the pristine table's filesystem, so both
+    # live under the temp dir.
+    pristine = path_for(
+        "pypiper_cdcu_base", sf_dir, ("orders",),
+        root=tempfile.gettempdir(), suffix="",
+    )
+
+    def committed(table_root: str) -> bool:
+        return os.path.exists(os.path.join(table_root, "CURRENT"))
+
+    if not committed(pristine):
+        publish(pristine, lambda out: tf.create(spark, out, base), committed)
     root = os.path.join(
-        tempfile.gettempdir(), f"pypiper_cdcu_tbl_{key}_{uuid.uuid4().hex[:8]}"
+        tempfile.gettempdir(), f"pypiper_cdcu_tbl_{uuid.uuid4().hex[:8]}"
     )
     shutil.copytree(pristine, root, copy_function=os.link)
 
@@ -1195,43 +1136,29 @@ def run_cdc_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("cents", T.LongType()),
         ]
     )
-    stage = os.path.join(tempfile.gettempdir(), f"pypiper_cdcu_src_{key}")
-    names = [f"batch{b}.parquet" for b in range(3)]
-    if not (
-        os.path.isdir(stage) and sorted(os.listdir(stage)) == sorted(names)
-    ):  # exact-set staging check (ADVICE r12; see _stage_slices)
-        if os.path.isdir(stage):
-            shutil.rmtree(stage)
-        os.makedirs(stage, exist_ok=True)
-        mtime0 = 1_000_000_000
-        for b in range(3):
-            wave = base.filter(F.col("o_orderkey") % 5 == b + 1).select(
-                "o_orderkey",
-                "o_orderstatus",
-                (F.col("cents") + 1000 * (b + 1)).alias("cents"),
+
+    def change_batch(b: int) -> DataFrame:
+        wave = base.filter(F.col("o_orderkey") % 5 == b + 1).select(
+            "o_orderkey",
+            "o_orderstatus",
+            (F.col("cents") + 1000 * (b + 1)).alias("cents"),
+        )
+        overlap = base.filter(F.col("o_orderkey") % 100 == 0).select(
+            "o_orderkey",
+            F.lit("U").alias("o_orderstatus"),
+            F.lit(777 * (b + 1)).cast("long").alias("cents"),
+        )
+        batch = wave.unionByName(overlap)
+        if b == 1:
+            inserts = o.filter(F.col("o_orderkey") % 1000 == 0).select(
+                (F.col("o_orderkey") + 3000000000).alias("o_orderkey"),
+                F.lit("I").alias("o_orderstatus"),
+                F.lit(999).cast("long").alias("cents"),
             )
-            overlap = base.filter(F.col("o_orderkey") % 100 == 0).select(
-                "o_orderkey",
-                F.lit("U").alias("o_orderstatus"),
-                F.lit(777 * (b + 1)).cast("long").alias("cents"),
-            )
-            batch = wave.unionByName(overlap)
-            if b == 1:
-                inserts = o.filter(F.col("o_orderkey") % 1000 == 0).select(
-                    (F.col("o_orderkey") + 3000000000).alias("o_orderkey"),
-                    F.lit("I").alias("o_orderstatus"),
-                    F.lit(999).cast("long").alias("cents"),
-                )
-                batch = batch.unionByName(inserts)
-            scratch = os.path.join(stage, f".tmp{b}")
-            batch.coalesce(1).write.mode("overwrite").parquet(scratch)
-            part = next(
-                f for f in sorted(os.listdir(scratch)) if f.endswith(".parquet")
-            )
-            path = os.path.join(stage, names[b])
-            os.replace(os.path.join(scratch, part), path)
-            shutil.rmtree(scratch, ignore_errors=True)
-            os.utime(path, (mtime0 + 60 * b, mtime0 + 60 * b))
+            batch = batch.unionByName(inserts)
+        return batch
+
+    stage = _staged_replay(sf_dir, "orders", "cdcu", 3, change_batch)
 
     app = "cdc_upsert"
 

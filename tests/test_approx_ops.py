@@ -454,16 +454,16 @@ def test_semantic_dedup_matches_numpy_recompute(spark, sf_dir):
 
 def test_ann_index_artifacts_survive_cold_start(spark, sf_dir, monkeypatch):
     """IVF centroids and PQ codebooks are persisted parquet artifacts:
-    a cold process (simulated by clearing the in-process memo dicts)
+    a cold process (simulated by clearing the in-process artifact memo)
     must answer index builds WITHOUT re-fitting — we poison the fit
     path (load_table) and assert the loaded artifacts are bit-identical
     to the warm builds."""
+    from pypiper_spark import artifacts
     from pypiper_spark.queries import vectors as V
 
     warm_ivf = V.build_ivf_index(spark, sf_dir, k=16)
     warm_pq = V.build_pq_codebooks(spark, sf_dir)
-    V._IVF_CACHE.clear()
-    V._PQ_CACHE.clear()
+    artifacts._MEMO.clear()
 
     def _boom(*a, **k):
         raise AssertionError("cold start re-ran the index fit path")
@@ -479,11 +479,12 @@ def test_ivfpq_artifact_survives_cold_start(spark, sf_dir, monkeypatch):
     """The residual codebooks persist like the other two artifacts: a
     memo-cleared process with a poisoned fit path loads bit-identical
     codebooks from parquet."""
+    from pypiper_spark import artifacts
     from pypiper_spark.queries import vectors as V
 
     cents = V.build_ivf_index(spark, sf_dir, k=16)
     warm = V.build_ivfpq_codebooks(spark, sf_dir, cents)
-    V._IVFPQ_CACHE.clear()
+    artifacts._MEMO.clear()
 
     def _boom(*a, **k):
         raise AssertionError("cold start re-ran the residual-PQ fit path")
@@ -519,10 +520,10 @@ def test_ivfpq_recall_against_bruteforce_and_beats_cell_floor(spark, sf_dir):
 
 def test_ann_index_artifact_invalidated_by_params(spark, sf_dir):
     """Different params -> different artifact file (no collisions)."""
-    from pypiper_spark.queries.vectors import _artifact_path
+    from pypiper_spark.artifacts import path_for
 
-    a = _artifact_path("ivf", sf_dir, "k=16:frac=0.25:seed=42")
-    b = _artifact_path("ivf", sf_dir, "k=32:frac=0.25:seed=42")
+    a = path_for("ivf", sf_dir, ("embeddings",), "k=16:frac=0.25:seed=42")
+    b = path_for("ivf", sf_dir, ("embeddings",), "k=32:frac=0.25:seed=42")
     assert a != b
 
 
@@ -626,10 +627,11 @@ def test_hnsw_artifact_survives_cold_start(spark, sf_dir, monkeypatch):
     """The graph/assignment/meta artifacts persist like the IVF
     centroids: a memo-cleared process with a poisoned build path
     returns identical paths and metadata from parquet alone."""
+    from pypiper_spark import artifacts
     from pypiper_spark.queries import vectors as V
 
     warm = V.build_hnsw_graph(spark, sf_dir)
-    V._HNSW_CACHE.clear()
+    artifacts._MEMO.clear()
 
     def _boom(*a, **k):
         raise AssertionError("cold start re-ran the graph build")
@@ -676,10 +678,11 @@ def test_hnsw_build_is_driver_bounded(spark, sf_dir, tmp_path, monkeypatch):
     assignment is written by executors via df.write.parquet."""
     from pyspark.sql import DataFrame
 
+    from pypiper_spark import artifacts
     from pypiper_spark.queries import vectors as V
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
-    V._HNSW_CACHE.clear()
+    artifacts._MEMO.clear()
     collect_sizes = []
     orig_collect = DataFrame.collect
 
@@ -696,7 +699,7 @@ def test_hnsw_build_is_driver_bounded(spark, sf_dir, tmp_path, monkeypatch):
     try:
         epath, spath, apath, n_nodes = V.build_hnsw_graph(spark, sf_dir)
     finally:
-        V._HNSW_CACHE.clear()  # paths point into tmp_path — don't leak
+        artifacts._MEMO.clear()  # paths point into tmp_path — don't leak
     assert n_nodes > 0
     # hash-sample fluctuation can exceed the cap slightly; 2x is far
     # below any corpus-sized pull at a scale where the pin matters
@@ -713,18 +716,17 @@ def test_artifact_builders_are_driver_bounded(spark, sf_dir, tmp_path, monkeypat
     (collect / toArrow; toPandas banned outright) during a COLD build
     must be bounded (sample-, probe-, or cap-sized). _truth_pairs in
     particular must do ZERO driver materialization: its pair frame is
-    executor-written via _atomic_write_df (the r11 form collected every
+    executor-written via artifacts.publish_df (the r11 form collected every
     >=threshold truth pair through the driver — bounded at this corpus
     but data-scaled on a near-dup-heavy crawl)."""
     from pyspark.sql import DataFrame
 
+    from pypiper_spark import artifacts
     from pypiper_spark.queries import dedup as D
     from pypiper_spark.queries import vectors as V
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
-    caches = (V._IVF_CACHE, V._PQ_CACHE, V._IVFPQ_CACHE, V._HNSW_CACHE)
-    for c in caches:
-        c.clear()
+    artifacts._MEMO.clear()
     sizes = []
     orig_collect, orig_toarrow = DataFrame.collect, DataFrame.toArrow
 
@@ -754,8 +756,7 @@ def test_artifact_builders_are_driver_bounded(spark, sf_dir, tmp_path, monkeypat
         V.build_ivfpq_codebooks(spark, sf_dir, centroids)
         V.build_hnsw_graph(spark, sf_dir)
     finally:
-        for c in caches:
-            c.clear()  # cached paths point into tmp_path — don't leak
+        artifacts._MEMO.clear()  # cached paths point into tmp_path — don't leak
     cap = 2 * V._HNSW_SAMPLE_CAP
     assert all(s <= cap for s in sizes), sizes
 
@@ -770,6 +771,7 @@ def test_hnsw_build_degenerate_single_vector_corpus(
     import pandas as pd
     import pyarrow.parquet as pq_
 
+    from pypiper_spark import artifacts
     from pypiper_spark.queries import vectors as V
 
     base = tmp_path_factory.mktemp("degenerate_emb")
@@ -780,11 +782,11 @@ def test_hnsw_build_degenerate_single_vector_corpus(
     monkeypatch.setenv(
         "SPARK_GRAFT_INDEX_DIR", str(tmp_path_factory.mktemp("degenerate_idx"))
     )
-    V._HNSW_CACHE.clear()
+    artifacts._MEMO.clear()
     try:
         epath, spath, apath, n_nodes = V.build_hnsw_graph(spark, str(base))
     finally:
-        V._HNSW_CACHE.clear()
+        artifacts._MEMO.clear()
     edges = pq_.read_table(epath)
     assert edges.num_rows == 0
     assert {f.name for f in edges.schema} == {"src", "dst", "dst_emb"}

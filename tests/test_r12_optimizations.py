@@ -3,8 +3,8 @@
 Covers the three internals the round restructured:
 - twins._stream_shuffle_partitions (size-adaptive streaming state
   partitions — the formula, its floor, and its session cap);
-- twins._stage_slices (fingerprint-keyed executor-written staging —
-  reuse on second call, rebuild on incomplete dir);
+- twins._staged_replay (corpus-keyed executor-written staging —
+  published once, reused untouched on the second call);
 - dedup._star_components (fixpoint fused into the round rollup —
   labels identical to a reference union-find on known graphs; the
   equivalence suite pins the corpus-level hashes, this pins the
@@ -62,28 +62,41 @@ def test_stream_partitions_missing_table_falls_back_to_session(spark, tmp_path):
     assert _stream_shuffle_partitions(spark, str(tmp_path / "nope")) == 8
 
 
-def test_stage_slices_reuses_complete_dir_and_rebuilds_incomplete(spark, tmp_path):
-    from pypiper_spark.streaming.twins import _stage_slices
+def test_staged_replay_reused_untouched_and_leaves_no_scratch(
+    spark, tmp_path, monkeypatch
+):
+    import tempfile
 
+    from pypiper_spark.streaming.twins import _staged_replay
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    (corpus / "events.parquet").write_bytes(b"stat-keyed only")
+    root = tmp_path / "tmp"
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
     df = spark.range(100).select(F.col("id").alias("event_id"))
-    stage = str(tmp_path / "stage")
-    _stage_slices(df, stage, 2, lambda k: F.col("event_id") % 2 == k)
-    names = sorted(os.listdir(stage))
+
+    def stage():
+        return _staged_replay(
+            str(corpus), "events", "t", 2,
+            lambda k: df.filter(F.col("event_id") % 2 == k),
+        )
+
+    path = stage()
+    names = sorted(os.listdir(path))
     assert names == ["batch0.parquet", "batch1.parquet"]
-    mtimes = [os.stat(os.path.join(stage, n)).st_mtime_ns for n in names]
+    mtimes = [os.stat(os.path.join(path, n)).st_mtime_ns for n in names]
     # deterministic ascending mtimes (the replay-order contract)
     assert mtimes[0] < mtimes[1]
-    # second call: complete dir is reused untouched (no rewrite)
-    inodes = [os.stat(os.path.join(stage, n)).st_ino for n in names]
-    _stage_slices(df, stage, 2, lambda k: F.col("event_id") % 2 == k)
-    assert [os.stat(os.path.join(stage, n)).st_ino for n in names] == inodes
-    # incomplete dir (one file missing) is rebuilt whole
-    os.unlink(os.path.join(stage, "batch1.parquet"))
-    _stage_slices(df, stage, 2, lambda k: F.col("event_id") % 2 == k)
-    assert sorted(os.listdir(stage)) == ["batch0.parquet", "batch1.parquet"]
+    # the publish left nothing but the staged dir in the temp root
+    assert os.listdir(root) == [os.path.basename(path)]
+    # second call: the published dir is reused untouched (no rewrite)
+    inodes = [os.stat(os.path.join(path, n)).st_ino for n in names]
+    assert stage() == path
+    assert [os.stat(os.path.join(path, n)).st_ino for n in names] == inodes
     # content round-trips: both slices together are the input set
     got = sorted(
-        r.event_id for r in spark.read.parquet(stage).collect()
+        r.event_id for r in spark.read.parquet(path).collect()
     )
     assert got == list(range(100))
 

@@ -4,8 +4,8 @@ Covers the ADVICE r12 robustness fixes and this round's structural
 optimizations (added as each lands):
 - twins._stream_shuffle_partitions: hard session cap (a session sized
   below the floor is never exceeded) and per-TABLE sizing;
-- twins._stage_slices: exact-file-set staging reuse (stale EXTRA
-  slices force a rebuild).
+- twins._staged_replay: the staged dir is keyed on the batch count, so
+  a different n never replays another run's slices.
 """
 
 from __future__ import annotations
@@ -57,22 +57,34 @@ def test_stream_partitions_size_from_named_table(spark, tmp_path):
     assert _stream_shuffle_partitions(spark, str(tmp_path), table="orders") == 6
 
 
-def test_stage_slices_rebuilds_on_extra_stale_file(spark, tmp_path):
-    """ADVICE r12: a staging dir holding batches beyond the requested n
-    (e.g. left by an older run with a larger batch count) must be
-    rebuilt — the directory readStream would ingest the stale extras."""
-    from pypiper_spark.streaming.twins import _stage_slices
+def test_staged_replay_never_replays_another_batch_count(
+    spark, tmp_path, monkeypatch
+):
+    """ADVICE r12: a run asking for n batches must never ingest slices
+    staged for another n (the directory readStream would replay the
+    stale extras). The batch count is part of the staged dir's key, so
+    n=2 after n=3 gets its own dir holding exactly its two slices."""
+    import tempfile
 
+    from pypiper_spark.streaming.twins import _staged_replay
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    (corpus / "events.parquet").write_bytes(b"stat-keyed only")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
     df = spark.range(100).select(F.col("id").alias("event_id"))
-    stage = str(tmp_path / "stage")
-    _stage_slices(df, stage, 3, lambda k: F.col("event_id") % 3 == k)
-    assert sorted(os.listdir(stage)) == [
+    three = _staged_replay(
+        str(corpus), "events", "t", 3, lambda k: df.filter(F.col("event_id") % 3 == k)
+    )
+    assert sorted(os.listdir(three)) == [
         "batch0.parquet", "batch1.parquet", "batch2.parquet"
     ]
-    # now request n=2 over the same dir: batch2 is stale and must go
-    _stage_slices(df, stage, 2, lambda k: F.col("event_id") % 2 == k)
-    assert sorted(os.listdir(stage)) == ["batch0.parquet", "batch1.parquet"]
-    got = sorted(r.event_id for r in spark.read.parquet(stage).collect())
+    two = _staged_replay(
+        str(corpus), "events", "t", 2, lambda k: df.filter(F.col("event_id") % 2 == k)
+    )
+    assert two != three
+    assert sorted(os.listdir(two)) == ["batch0.parquet", "batch1.parquet"]
+    got = sorted(r.event_id for r in spark.read.parquet(two).collect())
     assert got == list(range(100))
 
 
@@ -232,7 +244,7 @@ def test_tableformat_hardlink_clone_isolated(spark, tmp_path):
     assert clone_rows == {1: 10, 2: 999, 3: 30, 9: 1}
 
 
-def test_pagerank_edge_join_persisted_at_small_scale(spark):
+def test_pagerank_edge_join_persisted_at_small_scale(spark, sf_dir):
     """r13 pin: graph_pagerank persists the (src, dst, outdeg) edge-join
     frame when the source is under the 256 MB gate, so the per-round
     rank join reads an InMemoryTableScan instead of re-executing the
@@ -241,7 +253,7 @@ def test_pagerank_edge_join_persisted_at_small_scale(spark):
     from pypiper_spark.queries.graph import graph_pagerank
     from pypiper_spark.session import release_query_caches
 
-    df = graph_pagerank(spark, "/root/testdata/sf0.001")
+    df = graph_pagerank(spark, sf_dir)
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan
@@ -276,7 +288,7 @@ def test_star_components_round_has_no_per_round_distinct():
     )
 
 
-def test_lsh_candidate_dedup_shuffles_slim_keys(spark):
+def test_lsh_candidate_dedup_shuffles_slim_keys(spark, sf_dir):
     """r13 pin: _sim_ann_lsh_topk's candidate distinct must
     hash-partition on (probe_id, vec_id) only — the pre-r13 form
     shuffled BOTH 64-double vectors (ev, pv) through the dedup
@@ -288,7 +300,7 @@ def test_lsh_candidate_dedup_shuffles_slim_keys(spark):
 
     from pypiper_spark.queries.vectors import _sim_ann_lsh_topk
 
-    df = _sim_ann_lsh_topk(spark, "/root/testdata/sf0.001")
+    df = _sim_ann_lsh_topk(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     parts = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
     assert parts, plan[:2000]

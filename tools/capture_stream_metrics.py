@@ -59,6 +59,14 @@ def main() -> int:
             fh.write(json.dumps(keep, indent=1) + "\n")
         print(f"wrote {path}", file=sys.stderr)
 
+    def dump_drains(name: str) -> None:
+        """One file per query the runner drained (twins.LAST_PROGRESS):
+        a runner that drains several queries gets each query name in
+        its file name, so no drain overwrites another's evidence."""
+        drains = twins.LAST_PROGRESS
+        for qname, progresses in drains.items():
+            dump(name if len(drains) == 1 else f"{name}_{qname}", progresses)
+
     # stream-stream join (the run_stream_stream_join construction,
     # instrumented — same plan, same trigger)
     ev = twins.events_stream(spark, sf_dir).withColumn(
@@ -147,8 +155,7 @@ def main() -> int:
         qs[name].fn(spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
-        for qname, progresses in twins.LAST_PROGRESS.items():
-            dump(name, progresses)
+        dump_drains(name)
         spark.catalog.clearCache()
     # the late-accounting REGISTERED query is the batch reconstruction;
     # its stream twin lives in twins.run_late_accounting_stream (the
@@ -157,8 +164,7 @@ def main() -> int:
     twins.run_late_accounting_stream(spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
-    for qname, progresses in twins.LAST_PROGRESS.items():
-        dump("q_stream_late_accounting_twin", progresses)
+    dump_drains("q_stream_late_accounting_twin")
     return 0
 
 
